@@ -70,18 +70,24 @@ class NerServer(spark: SparkSession, registry: ModelRegistry, port: Int = 0) {
         if (path.nonEmpty && path.toIntOption.isEmpty)
           respond(ex, 404, """{"error":"bad model id"}""")
         else {
-          val modelId = path.toIntOption
-          val text = new String(ex.getRequestBody.readAllBytes(),
-            StandardCharsets.UTF_8)
-          val key = graft.store.Snapshots.configHash(prefix,
-            registry.resolve(modelId).id.toString, text)
-          val cached = memo.get(key)
-          val body = if (cached != null) { memoHits.incrementAndGet(); cached }
+          // bounded read: one byte past the cap flags an oversized body
+          val bytes = ex.getRequestBody.readNBytes(NerServer.MaxBodyBytes + 1)
+          if (bytes.length > NerServer.MaxBodyBytes)
+            respond(ex, 413,
+              s"""{"error":"body over ${NerServer.MaxBodyBytes} bytes"}""")
           else {
-            val out = handler(modelId, text)
-            memo.put(key, out); out
+            val modelId = path.toIntOption
+            val text = new String(bytes, StandardCharsets.UTF_8)
+            val key = graft.store.Snapshots.configHash(prefix,
+              registry.resolve(modelId).id.toString, text)
+            val cached = memo.get(key)
+            val body = if (cached != null) { memoHits.incrementAndGet(); cached }
+            else {
+              val out = handler(modelId, text)
+              memo.put(key, out); out
+            }
+            respond(ex, 200, body)
           }
-          respond(ex, 200, body)
         }
       }
     }
@@ -226,4 +232,9 @@ class NerServer(spark: SparkSession, registry: ModelRegistry, port: Int = 0) {
   def start(): Int = { server.start(); server.getAddress.getPort }
   def stop(): Unit = server.stop(0)
   def memoHitCount: Long = memoHits.get()
+}
+
+object NerServer {
+  /** Largest accepted POST body (a 40-doc page is tens of KiB). */
+  val MaxBodyBytes: Int = 8 << 20
 }

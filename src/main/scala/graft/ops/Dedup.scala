@@ -594,14 +594,17 @@ object Dedup {
         while (i < ms.length) {
           var j = i + 1
           while (j < ms.length) {
-            val (a, b) =
-              if (ms(i)._2 < ms(j)._2) (ms(i), ms(j)) else (ms(j), ms(i))
-            val va = a._3; val vb = b._3
-            var d = 0L
-            var t = 0
-            while (t < va.length) { d += va(t) * vb(t); t += 1 }
-            if (d > 0 && d * d * 1000000L >= tPm2 * a._4 * b._4)
-              out += ((cell, a._2, b._2))
+            // strict vec_id inequality: a repeated vec_id never self-pairs
+            if (ms(i)._2 != ms(j)._2) {
+              val (a, b) =
+                if (ms(i)._2 < ms(j)._2) (ms(i), ms(j)) else (ms(j), ms(i))
+              val va = a._3; val vb = b._3
+              var d = 0L
+              var t = 0
+              while (t < va.length) { d += va(t) * vb(t); t += 1 }
+              if (d > 0 && d * d * 1000000L >= tPm2 * a._4 * b._4)
+                out += ((cell, a._2, b._2))
+            }
             j += 1
           }
           i += 1

@@ -156,4 +156,21 @@ class NerServerSpec extends AnyFunSuite {
       assert(nonNum.statusCode() == 404, nonNum.body())
     }
   }
+
+  test("POST bodies past the size cap get 413 with a JSON error; serving goes on") {
+    withServer { (srv, port, client) =>
+      val url = s"http://localhost:$port/ner"
+      val cap = 8 << 20 // NerServer.MaxBodyBytes
+      // many short sentences, one byte past the cap
+      val big = ("Berlin ist gross . " * (cap / 19 + 1)).take(cap + 1)
+      assert(big.getBytes("UTF-8").length == cap + 1)
+      val r = post(client, url, big)
+      assert(r.statusCode() == 413, s"status ${r.statusCode()}")
+      assert(r.body().startsWith("{\"error\":\"") &&
+        r.body().endsWith("\"}"), r.body())
+      assert(srv.memoHitCount == 0)
+      val ok = post(client, url, "Berlin ist gross .")
+      assert(ok.statusCode() == 200 && ok.body().contains("B-LOC"), ok.body())
+    }
+  }
 }

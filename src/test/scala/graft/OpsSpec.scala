@@ -1111,6 +1111,25 @@ class SetSimJoinSpec extends org.scalatest.funsuite.AnyFunSuite {
       .where(col("is_dup") === 1L).count() == 1)
   }
 
+  test("semanticDedup: a vec_id that occurs twice never pairs with itself") {
+    import org.apache.spark.sql.functions.col
+    def vec(parts: (Int, Double)*): Array[Float] = {
+      val a = Array.fill(64)(0.0f)
+      parts.foreach { case (i, x) => a(i) = x.toFloat }
+      a
+    }
+    // ids 0-3 seed 4 cells; vec_id 2 is listed twice with the same
+    // vector, so both rows land in one cell; 4 is a true copy of 0
+    val rows = Seq(
+      0L -> vec(0 -> 1.0), 1L -> vec(0 -> -1.0),
+      2L -> vec(1 -> 1.0), 2L -> vec(1 -> 1.0), 3L -> vec(1 -> -1.0),
+      4L -> vec(0 -> 1.0))
+    val emb = rows.toDF("vec_id", "embedding")
+    val flagged = Dedup.semanticDedup(emb).where(col("is_dup") === 1L)
+      .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(flagged == Set(4L), s"flagged=$flagged")
+  }
+
   test("semanticClusters: transitive chain collapses to one keeper") {
     import org.apache.spark.sql.functions.col
     def vec(parts: (Int, Double)*): Array[Float] = {

@@ -95,6 +95,25 @@ class R8OptimSpec extends AnyFunSuite {
       s"pinned exchange coalesced: ${df.rdd.getNumPartitions} != $want")
   }
 
+  test("broadcast link path: three ScalaUDF calls in the optimized plan, one per link column") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ScalaUDF}
+    val docs = graft.gen.CorpusGen.docs(spark, 20, parts = 2)
+    val plan = graft.pipeline.KgPipeline.run(spark, docs,
+      graft.gen.CorpusGen.aliases(spark)).queryExecution.optimizedPlan
+    def udfs(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.collect { case u: ScalaUDF => u }
+    // asNondeterministic() keeps the link projection from being
+    // collapsed into (or pushed past) its consumers: were it inlined,
+    // each of lm/ls/lo would be re-invoked per reference
+    val all = plan.flatMap(_.expressions.flatMap(udfs))
+    assert(all.size == 3 && all.forall(!_.deterministic), plan.treeString)
+    val perColumn = plan.flatMap(_.expressions.collect {
+      case a: Alias if udfs(a).nonEmpty => a.name -> udfs(a).size
+    })
+    assert(perColumn.toMap == Map("lm" -> 1, "ls" -> 1, "lo" -> 1),
+      s"$perColumn\n${plan.treeString}")
+  }
+
   test("ShinglesNExpr == the HOF column form on edge inputs (byte-identical arrays)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
