@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Contract (north rule; reference analog: epoch-checkpoint resume,
   * models/bert.py:147-162, 171-173):
-  *  - triples are written partitioned by `bucket = hash(doc_id) % B`;
+  *  - triples are written partitioned by `bucket = hash(doc_id) % B`,
+  *    clustered by bucket first, so a commit writes ONE file per
+  *    non-empty bucket (not one per writer task per bucket);
   *  - after each bucket's data lands, one lineage row per bucket is
   *    APPENDED: (stage, partition_id, offset range, triple_count, rows_in,
   *    snapshot_id);
@@ -79,6 +81,27 @@ object LineageStore {
     }
   }
 
+  /** Write `rows` under `path`, partitioned by `partitionCols`, ONE file
+    * per partition value: the hash exchange on `bucket` (unnumbered, so
+    * AQE sizes it) hands each bucket to exactly one writer task; written
+    * straight off any other exchange, every task opens a file in every
+    * bucket. `partitionCols` may add only columns constant within a
+    * bucket's rows (the stream's `batch`). Dynamic partition overwrite.
+    * Returns the rows as written, persisted, for the caller's lineage
+    * aggregation; the caller unpersists them.
+    */
+  private[graft] def writeByBucket[T](rows: Dataset[T], path: String,
+                                      partitionCols: String*): Dataset[T] = {
+    val clustered = rows.repartition(col("bucket")).persist()
+    withDynamicOverwrite(rows.sparkSession) {
+      clustered.write
+        .mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*)
+        .parquet(path)
+    }
+    clustered
+  }
+
   /** Write triples for (possibly a subset of) buckets + lineage rows.
     * snapshotId should be a content/config hash — the Spark analog of the
     * reference's request-hash memoization key (webapp/app.py:157-158).
@@ -93,13 +116,7 @@ object LineageStore {
              triples: Dataset[Triple], snapshotId: String,
              processedBuckets: Option[Set[Int]] = None): Unit = {
     import spark.implicits._
-    val persisted = triples.persist()
-    withDynamicOverwrite(spark) {
-      persisted.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(triplesPath(root))
-    }
+    val persisted = writeByBucket(triples, triplesPath(root), "bucket")
     val now = System.currentTimeMillis()
     val dataRows = bucketLineageRows(persisted.toDF(), stage, snapshotId, now)
     persisted.unpersist()
@@ -120,7 +137,6 @@ object LineageStore {
                    docs: Dataset[Doc],
                    pipeline: Dataset[Doc] => Dataset[Triple],
                    buckets: Int, snapshotId: String): Int = {
-    import spark.implicits._
     recoverCompaction(spark, root) // heal an interrupted compaction first
     val done = committedBuckets(spark, root, stage)
     val pendingBuckets = (0 until buckets).toSet -- done
@@ -132,10 +148,9 @@ object LineageStore {
     val pending = docs.filter(d => !bcDone.value.contains(Triples.bucketOf(d.doc_id, buckets)))
     // even a doc-less / triple-less pending set commits: every pending
     // bucket gets its lineage row (possibly zero-count), so resume
-    // CONVERGES instead of re-examining empty buckets forever
-    val triples =
-      if (pending.isEmpty) spark.emptyDataset[Triple] else pipeline(pending)
-    commit(spark, root, stage, triples, snapshotId, Some(pendingBuckets))
+    // CONVERGES instead of re-examining empty buckets forever. No
+    // emptiness probe: an empty `pending` already yields no triples
+    commit(spark, root, stage, pipeline(pending), snapshotId, Some(pendingBuckets))
     committedBuckets(spark, root, stage).size - done.size
   }
 

@@ -14,9 +14,10 @@ import java.util.concurrent.atomic.AtomicLong
   * runs; the totals land as one row per metric under `<root>/_metrics`,
   * keyed by the same snapshot id as the lineage rows. Capture is
   * fire-and-forget cheap (a few atomic adds per task); the listener bus
-  * is asynchronous, so [[capture]] settles by polling the counters to
-  * quiescence after the block completes — bounded, sub-second in
-  * practice, and used only at commit granularity (never per row).
+  * is asynchronous, so [[capture]] drains it after the block completes
+  * (every task-end event of the block's jobs is posted before its
+  * action returns, so the drained totals are exact), and it is used
+  * only at commit granularity (never per row).
   */
 object StageMetrics {
 
@@ -53,19 +54,8 @@ object StageMetrics {
     spark.sparkContext.addSparkListener(acc)
     try {
       val r = body
-      // the listener bus is async: poll to quiescence (two identical
-      // consecutive snapshots), bounded at ~3 s
-      var prev = acc.snapshot
-      var settled = false
-      var i = 0
-      while (!settled && i < 30) {
-        Thread.sleep(100)
-        val cur = acc.snapshot
-        settled = cur == prev
-        prev = cur
-        i += 1
-      }
-      (r, prev)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      (r, acc.snapshot)
     } finally spark.sparkContext.removeSparkListener(acc)
   }
 

@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (ST3) → batch-id-keyed lineage rows.
   *
   * Exactly-once contract: each micro-batch writes its triples under
-  * `triples_stream/batch=<id>/` with DYNAMIC partition overwrite (a
+  * `triples_stream/batch=<id>/`, one file per bucket
+  * ([[LineageStore.writeByBucket]]), with DYNAMIC partition overwrite (a
   * replayed batch rewrites the same partition with identical content —
   * the pipeline is deterministic), then appends one lineage row per
   * bucket keyed `snapshot_id = "batch-<id>"`. A batch whose snapshot is
@@ -68,10 +69,8 @@ object StreamIngest {
       LineageStore.withDynamicOverwrite(spark) {
         val triples = KgPipeline.run(spark, batch, aliases, cfg = cfgS, ctx = Some(ctx))
           .withColumn("batch", lit(batchId))
-        val persisted = triples.persist()
-        persisted.write.mode(SaveMode.Overwrite)
-          .partitionBy("batch", "bucket")
-          .parquet(streamPath(root))
+        val persisted = LineageStore.writeByBucket(triples, streamPath(root),
+          "batch", "bucket")
         val now = System.currentTimeMillis()
         // the SAME per-bucket lineage recipe as the batch store
         // (LineageStore.bucketLineageRows — one copy, the two paths
@@ -127,7 +126,9 @@ object StreamIngest {
                            batchId: Long, root: String): Unit = {
     val k = 64
     val out =
-      if (triples.isEmpty) // cheap: the batch is persisted by the caller
+      // head(1), not isEmpty: on Spark 4.1 isEmpty plans a global limit,
+      // a shuffle stage over every partition; head(1) stops at a row
+      if (triples.head(1).isEmpty)
         spark.range(1).select(lit(QualityMarker).as("pred"),
           lit(0L).as("n_triples"), lit(0L).as("approx_docs"),
           lit(0L).as("approx_subjects"), lit(0L).as("approx_objects"),

@@ -331,16 +331,24 @@ class PipelineSpec extends AnyFunSuite {
     val pipe: org.apache.spark.sql.Dataset[Doc] => org.apache.spark.sql.Dataset[Triple] =
       ds => KgPipeline.run(spark, ds, aliases, cfg = KgPipeline.Config(buckets = buckets))
     val docs = CorpusGen.docs(spark, 60, parts = 4)
-    // two commits over disjoint doc halves accumulate small files
+    // two commits over disjoint doc halves
     LineageStore.commit(spark, root, "triples",
       pipe(docs.filter(_.doc_id < CorpusGen.docId(30))), "snap-a")
     LineageStore.commit(spark, root, "triples",
       pipe(docs.filter(_.doc_id >= CorpusGen.docId(30))), "snap-b")
     // second commit's dynamic overwrite replaced the first commit's
-    // partitions, so re-commit half A to actually accumulate files
+    // partitions; a third commit over all docs
     LineageStore.commit(spark, root, "triples",
       pipe(docs).unionByName(pipe(docs.filter(_.doc_id < CorpusGen.docId(0)))),
       "snap-c")
+    // a commit writes one file per bucket, so commits alone leave
+    // nothing to compact: lay the same rows out the way a multi-task
+    // partitionBy(bucket) writer without bucket clustering does (every
+    // task a file in every bucket). Lineage is left as committed.
+    val committedRows = LineageStore.readTriples(spark, root).collect().toSeq
+    spark.createDataset(committedRows).repartition(4)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("bucket").parquet(LineageStore.triplesPath(root))
     val beforeRows = LineageStore.readTriples(spark, root)
       .collect().map(t => (t.subj, t.pred, t.obj, t.doc_id, t.bucket)).sorted
     val committed = LineageStore.committedBuckets(spark, root, "triples")
